@@ -13,7 +13,8 @@ Row counts at ``scale`` 1.0 are those of the engine's sf0.1 fixture.
 The same ``seed`` and ``scale`` give byte-identical files; the seed
 also shuffles the row order, so the physical layout varies with it.
 
-Run ``python3 perfbench/gen_tables.py --seed 1 --scale 0.5 --out /tmp/t``.
+Run ``python3 perfbench/gen_tables.py --seed 1 --out tables`` to write
+the tables the ``query_mix`` workload reads (``SCALE``).
 """
 
 from __future__ import annotations
@@ -34,6 +35,8 @@ BASE_ROWS = {
     "customer": 15000, "supplier": 1000, "part": 20000, "orders": 150000,
     "lineitem": 600000, "events": 100000, "documents": 5000, "embeddings": 2000,
 }
+# the scale the query_mix workload runs at
+SCALE = 0.3
 VOCAB = (
     "spark window merge table column vector stream value data small join "
     "filter big group hash customer sort order slow line part fast row the "
@@ -196,10 +199,9 @@ def write_tables(seed: int, scale: float, out_dir: str) -> dict[str, dict[str, i
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--seed", type=int, required=True)
-    ap.add_argument("--scale", type=float, default=1.0)
     ap.add_argument("--out", required=True)
     args = ap.parse_args()
-    print(json.dumps(write_tables(args.seed, args.scale, args.out), indent=1))
+    print(json.dumps(write_tables(args.seed, SCALE, args.out), indent=1))
 
 
 if __name__ == "__main__":

@@ -2,11 +2,14 @@
 
 - ``compare_rows``: order-insensitive multiset comparison of two result
   sets. Integers, strings, booleans, dates and NULLs compare exactly.
-  Floats compare within ``REL_TOL`` relative, or within one unit of
-  their last decimal place when both carry at most ``ROUND_DIGITS``
-  decimals: the registered queries ROUND floating aggregates on both
-  sides, and a sum that is added in another order can land on the
-  other side of a rounding boundary.
+  Floats compare within ``REL_TOL`` relative, or within one rounding
+  unit of their column: the registered queries ROUND floating
+  aggregates on both sides, and a sum that is added in another order
+  can land on the other side of a rounding boundary. A column's unit is
+  ``10**-d`` for the largest decimal count ``d`` over its expected
+  values, when ``1 <= d <= ROUND_DIGITS``; a column whose expected
+  values are all whole, or carry more decimals than any query rounds
+  to, gets the relative tolerance only.
 - ``QueryOracle``: runs a query's registered DuckDB ``oracle_sql`` on
   the same parquet files the Spark side reads.
 - ``check_warehouse``: reads the committed BAGH parquet warehouse with
@@ -45,14 +48,33 @@ def _decimals(x: float) -> int:
     return len(s.split(".")[1].rstrip("0")) if "." in s else 0
 
 
-def floats_equal(a: float, b: float) -> bool:
+def floats_equal(a: float, b: float, unit: float | None = None) -> bool:
     a, b = float(a), float(b)
     if math.isnan(a) or math.isnan(b):
         return math.isnan(a) and math.isnan(b)
     if a == b or abs(a - b) <= REL_TOL * max(abs(a), abs(b)):
         return True
-    d = max(_decimals(a), _decimals(b))
-    return d <= ROUND_DIGITS and abs(a - b) <= 10.0 ** -d * (1 + 1e-9)
+    return unit is not None and abs(a - b) <= unit * (1 + 1e-9)
+
+
+def _floats_of(v) -> list | None:
+    """The floats of a float cell or a list-of-floats cell, else None."""
+    if _is_float(v):
+        return [v]
+    if isinstance(v, (list, tuple)) and v and all(_is_float(x) for x in v):
+        return list(v)
+    return None
+
+
+def column_units(rows: list) -> dict[int, float | None]:
+    """Per float column, the rounding unit its values show (None: none)."""
+    dec: dict[int, int] = {}
+    for r in rows:
+        for j, v in enumerate(r):
+            fl = _floats_of(v)
+            if fl is not None:
+                dec[j] = max([dec.get(j, 0), *map(_decimals, fl)])
+    return {j: 10.0 ** -d if 1 <= d <= ROUND_DIGITS else None for j, d in dec.items()}
 
 
 def _norm(v):
@@ -72,19 +94,18 @@ def _norm(v):
     return v
 
 
-def _split(row) -> tuple[tuple, tuple[float, ...]]:
-    """(exact key, float part) of one row."""
-    exact, floats = [], []
-    for v in row:
-        if _is_float(v):
-            exact.append("<float>")
-            floats.append(float(v))
-        elif isinstance(v, (list, tuple)) and v and all(_is_float(x) for x in v):
-            exact.append(f"<floats:{len(v)}>")
-            floats.extend(float(x) for x in v)
-        else:
+def _split(row) -> tuple[tuple, tuple[float, ...], tuple[int, ...]]:
+    """(exact key, float part, the column of each float) of one row."""
+    exact, floats, cols = [], [], []
+    for j, v in enumerate(row):
+        fl = _floats_of(v)
+        if fl is None:
             exact.append(_norm(v))
-    return tuple(exact), tuple(floats)
+            continue
+        exact.append("<float>" if _is_float(v) else f"<floats:{len(fl)}>")
+        floats.extend(map(float, fl))
+        cols.extend([j] * len(fl))
+    return tuple(exact), tuple(floats), tuple(cols)
 
 
 def _sort_key(v):
@@ -95,16 +116,18 @@ def compare_rows(got: list, want: list) -> str | None:
     """None when the result sets match, else a one-line description."""
     if len(got) != len(want):
         return f"row count {len(got)} != expected {len(want)}"
-    groups: dict[tuple, list[list]] = {}
+    units = column_units(want)
+    groups: dict[tuple, list] = {}
     for side, rows in ((0, got), (1, want)):
         for r in rows:
-            key, fl = _split(tuple(r))
-            groups.setdefault(key, [[], []])[side].append(fl)
-    for key, (g, w) in sorted(groups.items(), key=lambda kv: _sort_key(kv[0])):
+            key, fl, cols = _split(tuple(r))
+            groups.setdefault(key, [[], [], cols])[side].append(fl)
+    for key, (g, w, cols) in sorted(groups.items(), key=lambda kv: _sort_key(kv[0])):
         if len(g) != len(w):
             return f"rows {key!r}: {len(g)} != expected {len(w)}"
+        col_units = [units.get(j) for j in cols]
         for fg, fw in zip(sorted(g), sorted(w)):
-            if len(fg) != len(fw) or not all(map(floats_equal, fg, fw)):
+            if len(fg) != len(fw) or not all(map(floats_equal, fg, fw, col_units)):
                 return f"rows {key!r}: floats {fg[:6]} != expected {fw[:6]}"
     return None
 

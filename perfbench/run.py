@@ -4,7 +4,7 @@
 
 Each run starts a SparkSession (``dso_import_spark.session.get_spark``
 pinned to this machine from the environment), generates the seeded
-inputs and, for ``query_mix``, runs one untimed warm-up pass: that is
+inputs and, for ``query_mix``, runs two untimed warm-up passes: that is
 ``setup_s``. It then
 repeats back-to-back passes of the workload (a closed loop) until
 ``--seconds`` have passed, checks every pass's outputs against results
@@ -12,9 +12,13 @@ computed apart from the program, and prints one JSON object as its last
 line of output.
 
 With ``--trace 0`` the metrics are the end-to-end ones. With
-``--trace 1`` each round is one untraced and one traced pass; the
-metrics are the per-layer ones, and a trace file with per-pass,
-per-query/per-table and per-job rows is written under ``.bench_out/``.
+``--trace 1`` the run keeps the same set-up and pass schedule but every
+timed pass is traced; the metrics are the per-layer ones, and a trace
+file with per-pass, per-query/per-table and per-job rows is written
+under ``.bench_out/``. ``trace.wall_s`` is the traced passes' median
+wall time, to set against ``wall_s`` of an untraced run of the same
+seed; ``trace.overhead_s`` is the time the tracing code itself spent on
+a pass's path (span and job-group bookkeeping).
 A load sentinel (``/proc/loadavg`` and a fixed CPU-only loop, before and
 after the run) is printed beside the metrics so that a loaded machine
 shows itself. See README.md in this directory.
@@ -147,6 +151,7 @@ def layer_metrics(wl, tracer, jobs, res, slots: int) -> dict[str, float]:
         **{f"exec.{k}": v for k, v in ex.items()},
         "exec.slot_busy": ex["executor_run_s"] / (exec_wall * slots) if exec_wall else 0.0,
         "python.worker_cpu_s": sum(r.get("python_cpu_s", 0.0) for r in res.rows),
+        "trace.overhead_s": tracer.own_s,
     }
     for p in ("load", "replay"):
         m[f"bagh.{p}.merge_s"] = tracer.total("operators.merge.execute_merge", p)
@@ -216,47 +221,48 @@ def run(args, work: Path, slots: int) -> dict:
         setup_s = time.perf_counter() - T_START
         wl.compute_expected()
         problems = [f"warm-up: {p}" for p in warm.problems if not p.endswith(": raised")]
-        plain, traced, records = [], [], []
+        passes, records = [], []
         with RssSampler() as rss:
             t0 = time.perf_counter()
             while True:
-                plain.append(wl.run_pass())
                 if args.trace:
                     res, layers, rec = traced_pass(wl, spark, slots)
-                    traced.append(res)
                     records.append({**rec, "layers": {**layers, "session.start_s": session_s}})
+                else:
+                    res = wl.run_pass()
+                passes.append(res)
                 if time.perf_counter() - t0 >= args.seconds:
                     break
         after = sentinel()
     finally:
         stop_session(spark)
-    everything = plain + traced
-    for i, r in enumerate(everything):
+    for i, r in enumerate(passes):
         problems += [f"pass {i}: {p}" for p in r.problems if not p.endswith(": raised")]
-    wall = _median([r.wall_s for r in plain])
+    wall = _median([r.wall_s for r in passes])
     out = {
-        "workload": args.workload, "seed": args.seed, "passes": len(plain),
-        "attempted": sum(r.attempted for r in everything),
-        "failed": sum(r.failed for r in everything),
+        "workload": args.workload, "seed": args.seed, "passes": len(passes),
+        "attempted": sum(r.attempted for r in passes),
+        "failed": sum(r.failed for r in passes),
         "problems": problems,
         "sentinel": {"before": before, "after": after, "steal_share": steal_share(before, after)},
         "input": wl.input_summary(), "session_s": session_s,
-        "pass_wall_s": [r.wall_s for r in plain],
+        "pass_wall_s": [r.wall_s for r in passes],
         "peak_rss_mb_by_process": {k: v / MB for k, v in rss.peak_by.items()},
     }
     if args.trace:
         names = records[0]["layers"]
         layers = {k: _median([rec["layers"][k] for rec in records]) for k in names}
-        layers["trace.overhead_s"] = _median([r.wall_s for r in traced]) - wall
+        layers["trace.wall_s"] = wall
+        layers["memory.peak_rss_mb"] = rss.peak / MB
+        layers["memory.jvm_peak_rss_mb"] = rss.peak_by.get("jvm", 0) / MB
         out["metrics"] = {k: (v, LAYER_UNITS[k]) for k, v in layers.items()}
         out["traced_passes"] = records
     else:
         out["metrics"] = {
             "setup_s": (setup_s, "s"),
             "wall_s": (wall, "s"),
-            "cpu_s": (_median([r.cpu_s for r in plain]), "s"),
+            "cpu_s": (_median([r.cpu_s for r in passes]), "s"),
             "rows_per_s": (wl.rows_per_pass / wall, "1/s"),
-            "peak_rss_mb": (rss.peak / MB, "MB"),
         }
     return out
 
@@ -281,7 +287,8 @@ LAYER_UNITS = {
         "exec.shuffle_write_mb", "exec.spill_mb", "exec.slot_busy", "python.worker_cpu_s",
         *[f"bagh.{p}.{m}" for p in ("load", "replay")
           for m in ("merge_s", "write_s", "bridge_s", "gates_s", "jobs")],
-        "warehouse.files", "warehouse.mb", "trace.overhead_s",
+        "warehouse.files", "warehouse.mb", "memory.peak_rss_mb",
+        "memory.jvm_peak_rss_mb", "trace.wall_s", "trace.overhead_s",
     ]
 }
 
@@ -341,7 +348,9 @@ def main() -> int:
         print("CHECK FAILED:", p)
     if trace_file:
         print(f"trace file: {trace_file.relative_to(ROOT)}")
-        print(f"tracing overhead: {metrics['trace.overhead_s'][0]:.4f} s per pass")
+        print(f"tracing overhead: {metrics['trace.overhead_s'][0]:.4f} s per pass spent in "
+              f"the tracing code; traced pass wall {metrics['trace.wall_s'][0]:.4f} s, to set "
+              "against wall_s of an untraced run of the same seed")
     print(json.dumps({
         "correct": not out["problems"],
         "attempted": out["attempted"],

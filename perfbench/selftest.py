@@ -63,6 +63,20 @@ def comparator_cases(tmp: str) -> None:
     bad[0][3] = bad[0][3] * 1.001
     expect("corrupted float cell", oracle.compare_rows(bad, want), True)
 
+    # the unit comes from the column (two decimals), not from the cell's
+    # own digits: 12.5 printed with one decimal is still 10 units off 12.6
+    want2 = [("a", 12.5), ("b", 3.17)]
+    expect("trailing-zero value 10 units off",
+           oracle.compare_rows([("a", 12.6), ("b", 3.17)], want2), True)
+    expect("trailing-zero value one unit off",
+           oracle.compare_rows([("a", 12.51), ("b", 3.17)], want2), False)
+    want3 = [("a", 40.0), ("b", 7.0)]
+    expect("integer-valued float 1 off",
+           oracle.compare_rows([("a", 41.0), ("b", 7.0)], want3), True)
+    want4 = [("a", 0.412345), ("b", 0.41)]
+    expect("six-decimal value 0.01 off",
+           oracle.compare_rows([("a", 0.412345), ("b", 0.42)], want4), True)
+
     bad = [list(r) for r in rows]
     bad[1][1] = "NATION_X"
     expect("corrupted string cell", oracle.compare_rows(bad, want), True)

@@ -136,6 +136,8 @@ class Tracer:
     workload: str
     phase: str = ""
     spans: list[Span] = field(default_factory=list)
+    # seconds spent in the tracing code itself, outside the traced calls
+    own_s: float = 0.0
     _stack: list[int] = field(default_factory=list)
     _patches: list[tuple[object, str, object]] = field(default_factory=list)
 
@@ -146,30 +148,37 @@ class Tracer:
     @contextlib.contextmanager
     def job_group(self, key: str, phase: str):
         """Tag the jobs started inside with ``<workload>/<key>/<phase>``."""
+        t = time.perf_counter()
         sc = self.sc
         prev = sc.getLocalProperty("spark.jobGroup.id")
         prev_desc = sc.getLocalProperty("spark.job.description")
         group = f"{self.workload}/{key}/{phase}"
         sc.setJobGroup(group, group)
+        self.own_s += time.perf_counter() - t
         try:
             yield
         finally:
+            t = time.perf_counter()
             sc.setLocalProperty("spark.jobGroup.id", prev)
             sc.setLocalProperty("spark.job.description", prev_desc)
+            self.own_s += time.perf_counter() - t
 
     @contextlib.contextmanager
     def span(self, name: str):
+        t = time.perf_counter()
         sp = Span(name, self.phase, time.perf_counter(),
                   parent=self._stack[-1] if self._stack else None)
         self.spans.append(sp)
         self._stack.append(len(self.spans) - 1)
+        self.own_s += time.perf_counter() - t
         try:
             yield sp
         finally:
-            sp.end = time.perf_counter()
+            sp.end = t = time.perf_counter()
             self._stack.pop()
             if sp.parent is not None:
                 self.spans[sp.parent].child_s += sp.dur
+            self.own_s += time.perf_counter() - t
 
     def wrap(self, owner, attr: str, name: str, group=None) -> None:
         """Replace ``owner.attr`` (and every engine-module alias of it)
@@ -179,7 +188,9 @@ class Tracer:
         tracer = self
 
         def traced(*args, **kwargs):
+            t = time.perf_counter()
             tag = group(args, kwargs) if group else None
+            tracer.own_s += time.perf_counter() - t
             with tracer.span(name), (
                 tracer.job_group(*tag) if tag else contextlib.nullcontext()
             ):

@@ -39,12 +39,14 @@ class _Timer:
         self.res = res
 
     def __enter__(self):
-        self.t0, self.c0 = time.perf_counter(), sample_tree()
+        # the /proc samples stay outside the wall time
+        self.c0 = sample_tree()
+        self.t0 = time.perf_counter()
         return self
 
     def __exit__(self, *exc):
-        c1 = sample_tree()
         self.wall_s = time.perf_counter() - self.t0
+        c1 = sample_tree()
         self.cpu_s = c1.cpu_s - self.c0.cpu_s
         self.python_cpu_s = c1.python_cpu_s - self.c0.python_cpu_s
         self.res.wall_s += self.wall_s
@@ -70,7 +72,7 @@ class QueryMix:
         "semdedup_prune_autok",
         "ann_lsh_topk",
     )
-    SCALE = 0.3
+    SCALE = gen_tables.SCALE
 
     def __init__(self, spark, work: str, seed: int, slots: int):
         from dso_import_spark.queries import REGISTRY
@@ -98,7 +100,12 @@ class QueryMix:
         self._unchecked.clear()
 
     def warm_up(self) -> PassResult:
-        return self.run_pass()
+        """Two untimed passes: the JIT is still compiling through the
+        second pass after a cold start (its CPU seconds keep falling), and
+        the timed passes should measure the served steady state."""
+        first, second = self.run_pass(), self.run_pass()
+        second.problems += first.problems
+        return second
 
     def run_pass(self, tracer: Tracer | None = None) -> PassResult:
         res = PassResult()
@@ -147,7 +154,7 @@ class BaghImport:
     warehouse, then replay a changed extract through ``BagHJob``."""
 
     name = "bagh_import"
-    SCALE = 0.5
+    SCALE = gen_bagh.SCALE
     TABLES = ["buurt", "pand", "verblijfsobject"]
 
     def __init__(self, spark, work: str, seed: int, slots: int):
