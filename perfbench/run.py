@@ -3,7 +3,7 @@
     python3 perfbench/run.py --workload bagh_import --seed 1 --seconds 10 --trace 0
 
 Each run starts a SparkSession (``dso_import_spark.session.get_spark``
-pinned to this machine from the environment), generates the seeded
+pinned from the benchmark's environment), generates the seeded
 inputs and, for ``query_mix``, runs two untimed warm-up passes: that is
 ``setup_s``. It then
 repeats back-to-back passes of the workload (a closed loop) until
