@@ -149,6 +149,11 @@ FORCE_REVERIFY: list[str] = []
 # driver budget (or the next rotation) lands here before any fresh
 # green. New queries added mid-round go at the HEAD of the FRONT.
 # Recompute with `python -m dso_import_spark.rotation` when rotating.
+# Any commit that touches a module a registered query depends on must
+# append the rows it re-stales to this queue IN THAT SAME COMMIT: the
+# rotation CLI lists them (stale greens outside front + queue) once the
+# edit is committed. Round 14 skipped this step and left 23 stale
+# greens unstaged until they were appended below.
 ROUND14_QUEUE = [
     # displaced from the round-13 front by this round's head slots
     "theil_sen_trend", "q10_returned_items", "q11_important_balances",
@@ -271,6 +276,20 @@ ROUND14_QUEUE = [
     "ridge_regression_normal_eq",
     "dp_sensitivity_audit",
     "selectivity_estimate_cert",
+    # re-staled IN round 14 by the merge-counts commit (f8f6cb0:
+    # operators/merge.py + queries_pkg/ref_semantics.py) and the two
+    # SemDeDup checkpoint-gate commits (def2e92, 83a96f7:
+    # operators/similarity.py, which queries_pkg/windows.py reaches
+    # transitively). Their r9-r12 evidence is among the freshest in
+    # the queue, so they go last; stale_green() order.
+    "surrogate_key", "multi_id_zip", "safe_int_cast", "tri_state_boolean",
+    "interval_validity_filter", "open_interval_gate", "temporal_overlap",
+    "fk_validation", "delete_detection", "merge_insert_update",
+    "merge_counts_scale", "explode_bridge",
+    "window_topk_per_group", "running_sum", "lag_lead_delta",
+    "sessionize_events", "tumbling_hour_window", "asof_join_last_signup",
+    "ntile_rank_analytics", "rolling_hour_stats", "group_exact_percentiles",
+    "revenue_share_window", "asof_tolerance_cogroup",
 ]
 
 

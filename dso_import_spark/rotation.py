@@ -19,6 +19,14 @@ at the start of a round to get:
 tests/test_registry_order.py pins the chosen front block; update it,
 ``ROUND5_FRONT``-style lists, and ``FRONT_CHOSEN_AGAINST_ROUND`` in
 queries.py in the same commit when rotating.
+
+Any commit that touches a module a registered query depends on (its
+defining module, or an operators/sources/functions/streaming module it
+imports transitively) re-stales that query's driver evidence. Append
+the rows it re-stales to the current queue (``ROUND14_QUEUE``) in that
+same commit: run this CLI after committing the edit, and stage every
+stale green it lists that sits outside the front block and the queue.
+Round 14 missed this step and left 23 stale greens unstaged.
 """
 
 from __future__ import annotations

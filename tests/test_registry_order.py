@@ -75,7 +75,9 @@ def test_round14_queue_is_staged():
     # pinned oldest-evidence-first
     from dso_import_spark.rotation import stale_green
 
-    assert set(stale_green()) <= set(ROUND14_QUEUE) | set(FRONT_50)
+    staged = set(ROUND14_QUEUE) | set(FRONT_50)
+    unstaged = [n for n in stale_green() if n not in staged]
+    assert unstaged == [], unstaged
 
 
 def test_registry_names_appear_in_survey():
